@@ -114,6 +114,9 @@ def vbyte_decode(buf: bytes, count: int) -> np.ndarray:
     if count == 0:
         return np.zeros(0, dtype=np.int64)
     raw = np.frombuffer(buf, dtype=np.uint8)
+    head = raw[:count]
+    if len(head) == count and head.max() < 0x80:
+        return head.astype(np.int64)    # every value fits one byte
     ends = np.flatnonzero((raw & 0x80) == 0)[:count]
     starts = np.concatenate(([0], ends[:-1] + 1))
     # values are ≤ 2**63: at most 9 bytes each; build positional weights

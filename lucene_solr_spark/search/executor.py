@@ -453,17 +453,22 @@ class Searcher:
         return spec, live, root is None
 
     # ------------------------------------------------------------------
+    def _kernel_blocks(self, live) -> DataFrame:
+        """The key-filtered postings scan the kernel reads: only the
+        columns it uses, plus the tombstone column when deletes live in a
+        table."""
+        blocks = self.index.postings.filter(_key_filter(live))
+        if not self.index.with_positions:
+            blocks = blocks.drop("pos_blob")
+        blocks = blocks.drop("off_blob", "pay_blob")   # kernel-unused
+        return self._with_del_col(blocks)
+
     def _run_kernel(self, plan, mode="f32", collect_all=False, k=10,
                     prune=True) -> DataFrame:
         spec, live, dead = self._spec_for_plan(
             plan, mode, k, prune, collect_all=collect_all)
         if dead:
             return self.spark.createDataFrame([], KERNEL_SCHEMA)
-        blocks = self.index.postings.filter(_key_filter(live))
-        if not self.index.with_positions:
-            blocks = blocks.drop("pos_blob")
-        blocks = blocks.drop("off_blob", "pay_blob")   # kernel-unused
-        blocks = self._with_del_col(blocks)
 
         def kernel(batches):
             yield from _bucket_kernel(batches, spec)
@@ -471,7 +476,8 @@ class Searcher:
         # No shuffle: the index layout is bucket-major (whole grid cells per
         # partition, sorted by bucket/field/term/block), so the narrow filter
         # keeps every bucket's blocks contiguous within its partition.
-        return blocks.mapInPandas(kernel, schema=KERNEL_SCHEMA)
+        return self._kernel_blocks(live).mapInPandas(kernel,
+                                                     schema=KERNEL_SCHEMA)
 
     def _with_del_col(self, blocks):
         """Attach the per-cell tombstone column when the index carries a
@@ -484,26 +490,16 @@ class Searcher:
             return blocks
         return blocks.join(dtab, "bucket", "left")
 
-    # ------------------------------------------------------------------
-    # public API
-    # ------------------------------------------------------------------
-    def top_k_many(self, queries: list, k: int = 10, mode: str = "f32",
-                   prune: bool = True) -> list:
-        """Batch top-k: ALL queries in ONE Spark job — one term-filtered
-        scan over the union of query terms, one pass over each bucket
-        scoring every query from the same Arrow batches, per-query heaps
-        and thresholds. → list of pandas DataFrames (rank, doc_id,
-        score), parallel to `queries`. The throughput mode for query
-        logs (the benchmark harness shape, ReadTask.java:54)."""
-        if self.sim != "bm25":
-            mode = "f64"      # non-BM25 similarities are f64-only
-        empty = pd.DataFrame({"rank": [], "doc_id": [], "score": []})
-        results: dict[int, pd.DataFrame] = {}
-        specs, live_union, qids = [], [], []
+    def _batch_specs(self, queries, k, mode, prune):
+        """Plan a batch. → (specs, live key union, query index of each
+        spec, {query index: result} for queries answered without the
+        kernel: no plan, dead plans, and the ALL / unbounded / exists
+        paths)."""
+        specs, live_union, qids, results = [], [], [], {}
         for qi, query in enumerate(queries):
             plan = self._plan(query)
             if plan is None:
-                results[qi] = empty
+                results[qi] = _no_hits()
                 continue
             if plan == "ALL" or (isinstance(plan, dict)
                                  and ("unbounded" in plan
@@ -512,38 +508,36 @@ class Searcher:
                 continue
             spec, live, dead = self._spec_for_plan(plan, mode, k, prune)
             if dead:
-                results[qi] = empty
+                results[qi] = _no_hits()
                 continue
             specs.append(spec)
             live_union.extend(live)
             qids.append(qi)
-        if specs:
-            live_union = list(dict.fromkeys(live_union))
-            blocks = self.index.postings.filter(_key_filter(live_union))
-            if not self.index.with_positions:
-                blocks = blocks.drop("pos_blob")
-            blocks = blocks.drop("off_blob", "pay_blob")
-            blocks = self._with_del_col(blocks)
+        return specs, list(dict.fromkeys(live_union)), qids, results
 
+    # ------------------------------------------------------------------
+    # public API
+    # ------------------------------------------------------------------
+    def top_k_many(self, queries: list, k: int = 10, mode: str = "f32",
+                   prune: bool = True) -> list:
+        """Batch top-k: ALL queries in ONE Spark job — one term-filtered
+        scan over the union of query terms, one pass over each bucket
+        scoring every query from the same decoded blocks, per-query heaps
+        and thresholds. → list of pandas DataFrames (rank, doc_id,
+        score), parallel to `queries`. The throughput mode for query
+        logs (the benchmark harness shape, ReadTask.java:54)."""
+        if self.sim != "bm25":
+            mode = "f64"      # non-BM25 similarities are f64-only
+        specs, live, qids, results = self._batch_specs(queries, k, mode, prune)
+        if specs:
             def kernel(batches):
                 yield from _bucket_kernel_multi(batches, specs)
 
-            pdf = blocks.mapInPandas(
+            pdf = self._kernel_blocks(live).mapInPandas(
                 kernel, schema="query_id int, doc_id long, score double"
             ).toPandas()
-            for local_qi, qi in enumerate(qids):
-                sub = pdf[pdf["query_id"] == local_qi]
-                if len(sub) == 0:
-                    results[qi] = empty
-                    continue
-                sub = (sub.sort_values(["score", "doc_id"],
-                                       ascending=[False, True],
-                                       kind="mergesort")
-                       .head(k).reset_index(drop=True))
-                sub["rank"] = np.arange(1, len(sub) + 1)
-                if mode == "f32":
-                    sub["score"] = sub["score"].astype(np.float32)
-                results[qi] = sub[["rank", "doc_id", "score"]]
+            for qi, res in zip(qids, _top_docs(pdf, k, mode, len(specs))):
+                results[qi] = res if len(res) else _no_hits()
         return [results[qi] for qi in range(len(queries))]
 
     def top_k(self, query, k: int = 10, mode: str = "f32", prune: bool = True):
@@ -552,12 +546,11 @@ class Searcher:
             mode = "f64"      # non-BM25 similarities are f64-only
         plan = self._plan(query)
         if plan is None:
-            return pd.DataFrame({"rank": [], "doc_id": [], "score": []})
+            return _no_hits()
         if plan == "ALL":
             pdf = self._all_live_docs().orderBy("doc_id").limit(k).toPandas()
-            pdf["score"] = np.float32(1.0)
-            pdf["rank"] = np.arange(1, len(pdf) + 1)
-            return pdf[["rank", "doc_id", "score"]]
+            pdf["score"] = 1.0      # constant score, float32 in every mode
+            return _top_docs(pdf, k, "f32")[0]
         if isinstance(plan, dict) and ("unbounded" in plan
                                        or "exists" in plan):
             df = (self._score_unbounded(plan["unbounded"])
@@ -565,21 +558,11 @@ class Searcher:
                   else self._score_exists(plan["exists"]))
             pdf = (df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                    .toPandas())
-            pdf["rank"] = np.arange(1, len(pdf) + 1)
-            if mode == "f32":
-                pdf["score"] = pdf["score"].astype(np.float32)
-            return pdf[["rank", "doc_id", "score"]]
-        df = self._run_kernel(plan, mode=mode, collect_all=False, k=k,
-                              prune=prune)
-        pdf = df.toPandas()
-        if len(pdf) == 0:
-            return pd.DataFrame({"rank": [], "doc_id": [], "score": []})
-        pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True],
-                              kind="mergesort").head(k).reset_index(drop=True)
-        pdf["rank"] = np.arange(1, len(pdf) + 1)
-        if mode == "f32":
-            pdf["score"] = pdf["score"].astype(np.float32)
-        return pdf[["rank", "doc_id", "score"]]
+            return _top_docs(pdf, k, mode)[0]
+        pdf = self._run_kernel(plan, mode=mode, collect_all=False, k=k,
+                               prune=prune).toPandas()
+        res = _top_docs(pdf, k, mode)[0]
+        return res if len(res) else _no_hits()
 
     def score_all(self, query, mode: str = "f64") -> DataFrame:
         """All matching docs with scores, as a Spark DataFrame (exhaustive,
@@ -1629,71 +1612,80 @@ def _key_filter(keys: list[tuple[str, str]]):
     return cond if cond is not None else F.lit(False)
 
 
+def _no_hits() -> pd.DataFrame:
+    return pd.DataFrame({"rank": [], "doc_id": [], "score": []})
+
+
+def _top_docs(pdf: pd.DataFrame, k: int, mode: str,
+              n_queries: int = 1) -> list:
+    """Driver-side TopDocs merge of kernel hits: one stable sort on
+    (query_id,) score desc, doc_id asc (the HitQueue tie-break,
+    HitQueue.java:76-81), then per query its first k hits with a 1-based
+    rank and, in f32 mode, float32 scores. A frame without ``query_id``
+    holds one query's hits. → n_queries frames (rank, doc_id, score)."""
+    docs = pdf["doc_id"].to_numpy()
+    scores = pdf["score"].to_numpy()
+    if "query_id" in pdf.columns:
+        qids = pdf["query_id"].to_numpy()
+        order = np.lexsort((docs, -scores, qids))
+        bounds = np.searchsorted(qids[order], np.arange(n_queries + 1))
+    else:
+        order = np.lexsort((docs, -scores))
+        bounds = [0, len(order)]
+    docs, scores = docs[order], scores[order]
+    if mode == "f32":
+        scores = scores.astype(np.float32)
+    out = []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        hi = min(hi, lo + k)
+        out.append(pd.DataFrame({"rank": np.arange(1, hi - lo + 1),
+                                 "doc_id": docs[lo:hi],
+                                 "score": scores[lo:hi]}))
+    return out
+
+
 # ---------------------------------------------------------------------------
 # the per-partition kernel
 # ---------------------------------------------------------------------------
 
 def _bucket_kernel(batches, spec):
-    """Iterate bucket-sorted block rows; score one bucket at a time.
-
-    Carries the pruning threshold across buckets within the partition
-    (the per-slice MaxScoreAccumulator analog — thresholds don't cross
-    partitions, which only costs pruning efficiency, never correctness).
-    """
-    buf = None
-    threshold = -np.inf
-    heap: list = []  # (score, -doc_id) min-heap of partition-local top-k
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        if buf is not None:
-            pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
-        bucket_vals = pdf["bucket"].to_numpy()
-        tail_mask = bucket_vals == bucket_vals[-1]
-        buf = pdf[tail_mask]
-        head = pdf[~tail_mask]
-        if len(head):
-            for _, grp in head.groupby("bucket", sort=True):
-                out, threshold = _score_bucket(grp, spec, threshold, heap)
-                if out is not None:
-                    yield out
-    if buf is not None and len(buf):
-        out, threshold = _score_bucket(buf, spec, threshold, heap)
-        if out is not None:
-            yield out
-    # top-k mode: ONE flush of the partition heap — the driver receives
-    # at most partitions × k rows, never buckets × k (scale posture)
-    if not spec["collect_all"]:
-        out = _flush_heap(heap)
-        if out is not None:
-            yield out
+    """One-spec run of `_bucket_kernel_multi`, without the query_id
+    column (KERNEL_SCHEMA frames)."""
+    for out in _bucket_kernel_multi(batches, [spec]):
+        yield out.drop(columns="query_id")
 
 
 def _bucket_kernel_multi(batches, specs):
-    """Multi-query variant of _bucket_kernel: one pass over the bucket-
-    sorted rows scores every spec, with independent heaps/thresholds."""
-    buf = None
-    states = [{"threshold": -np.inf, "heap": []} for _ in specs]
+    """Iterate bucket-sorted block rows; score every spec one bucket at a
+    time from ONE shared `_BucketData` view per bucket, so a key decodes
+    at most once per bucket however many queries reference it. Heaps and
+    thresholds stay per spec.
+
+    Each spec's pruning threshold carries across buckets within the
+    partition (the per-slice MaxScoreAccumulator analog — thresholds
+    don't cross partitions, which only costs pruning efficiency, never
+    correctness). The last bucket of an Arrow batch may continue in the
+    next one, so it is carried over until the bucket changes.
+    """
+    grid = specs[0]["grid"] if specs else 0
+    thresholds = [-np.inf] * len(specs)
+    heaps: list = [[] for _ in specs]  # (score, -doc_id) min-heaps
 
     def run_bucket(grp):
-        outs = []
+        data = _BucketData(grp, grid)
         for qi, spec in enumerate(specs):
-            st = states[qi]
-            out, st["threshold"] = _score_bucket(
-                grp, spec, st["threshold"], st["heap"])
+            out, thresholds[qi] = _score_bucket(data, spec, thresholds[qi],
+                                                heaps[qi])
             if out is not None and len(out):
-                out = out.copy()
                 out.insert(0, "query_id", np.int32(qi))
-                outs.append(out)
-        return outs
+                yield out
 
+    buf = None
     for pdf in batches:
         if len(pdf) == 0:
             continue
         if buf is not None:
             pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
         bucket_vals = pdf["bucket"].to_numpy()
         tail_mask = bucket_vals == bucket_vals[-1]
         buf = pdf[tail_mask]
@@ -1701,13 +1693,14 @@ def _bucket_kernel_multi(batches, specs):
         if len(head):
             for _, grp in head.groupby("bucket", sort=True):
                 yield from run_bucket(grp)
-    if buf is not None and len(buf):
+    if buf is not None:
         yield from run_bucket(buf)
-    # one heap flush per query: driver receives ≤ partitions × k × queries
+    # top-k mode: ONE flush per query of the partition heap — the driver
+    # receives at most partitions × k × queries rows, never buckets × k
     for qi, spec in enumerate(specs):
         if spec["collect_all"]:
             continue
-        out = _flush_heap(states[qi]["heap"])
+        out = _flush_heap(heaps[qi])
         if out is not None:
             out.insert(0, "query_id", np.int32(qi))
             yield out
@@ -1725,38 +1718,79 @@ def _push_heap(heap, k, scores, docs, threshold):
     return threshold
 
 
+# block columns the kernel reads (pos_blob only on positional indexes)
+_VIEW_COLS = ("block_id", "doc_count", "doc_blob", "freq_blob", "norm_blob",
+              "imp_freqs", "imp_norms", "pos_blob")
+
+
 class _BucketData:
-    """Lazy per-bucket decode cache: each (field, term) key decodes at
-    most once per bucket regardless of how many clauses reference it."""
+    """Columnar view of one bucket's blocks, shared by every spec scored
+    on the bucket. Each column is pulled out of pandas once, each
+    (field, term) key maps to its row indices (block order kept), and
+    each block, key and key-with-positions decodes at most once per
+    bucket however many queries and clauses reference it. Decoded arrays
+    are shared: callers must not write to them."""
 
-    __slots__ = ("by_key", "spec", "off", "dec", "decp")
+    __slots__ = ("off", "rows", "cols", "del_offsets", "blk", "imp", "dec",
+                 "decp")
 
-    def __init__(self, grp: pd.DataFrame, spec, off: int):
-        self.by_key = {k: g for k, g in grp.groupby(["field", "term"],
-                                                    sort=False)}
-        self.spec = spec
-        self.off = off
+    def __init__(self, grp: pd.DataFrame, grid: int):
+        self.off = int(grp["bucket"].iat[0]) * grid
+        rows: dict = {}
+        for i, key in enumerate(zip(grp["field"].tolist(),
+                                    grp["term"].tolist())):
+            rows.setdefault(key, []).append(i)
+        self.rows = rows
+        self.cols = {c: grp[c].tolist() for c in _VIEW_COLS
+                     if c in grp.columns}
+        self.del_offsets = (grp["del_offsets"].iat[0]
+                            if "del_offsets" in grp.columns else None)
+        self.blk: dict = {}
+        self.imp: dict = {}
         self.dec: dict = {}
         self.decp: dict = {}
+
+    def block(self, i):
+        """(docs, freqs, norms) of block row i."""
+        out = self.blk.get(i)
+        if out is None:
+            out = self.blk[i] = decode_postings_block(
+                {c: col[i] for c, col in self.cols.items()})
+        return out
+
+    def blocks(self, rows):
+        """(docs, freqs, norms) of the block rows, concatenated in order."""
+        parts = [self.block(i) for i in rows]
+        return tuple(np.concatenate([p[j] for p in parts]) for j in range(3))
+
+    def impacts(self, key):
+        """(freqs, norms, starts, lens): the key's per-block competitive-
+        impact skylines concatenated in block order, with each block's
+        segment start and length."""
+        out = self.imp.get(key)
+        if out is None:
+            rows = self.rows[key]
+            fr = [self.cols["imp_freqs"][i] for i in rows]
+            no = [self.cols["imp_norms"][i] for i in rows]
+            lens = np.array([len(f) for f in fr], dtype=np.int64)
+            starts = np.zeros(len(rows), dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            out = self.imp[key] = (
+                np.concatenate(fr).astype(np.int64, copy=False),
+                np.concatenate(no).astype(np.int64, copy=False),
+                starts, lens)
+        return out
 
     def decode(self, key):
         """(docs, freqs, norms) for the key within the bucket, or None."""
         if key in self.dec:
             return self.dec[key]
-        g = self.by_key.get(key)
-        if g is None:
-            self.dec[key] = None
-            return None
-        docs_l, freqs_l, norms_l = [], [], []
-        for row in g.itertuples(index=False):
-            d, f, n = decode_postings_block(row._asdict())
-            docs_l.append(d)
-            freqs_l.append(f)
-            norms_l.append(n)
-        docs = np.concatenate(docs_l)
-        order = np.argsort(docs, kind="stable")
-        out = (docs[order], np.concatenate(freqs_l)[order],
-               np.concatenate(norms_l)[order])
+        rows = self.rows.get(key)
+        out = None
+        if rows is not None:
+            docs, freqs, norms = self.blocks(rows)
+            order = np.argsort(docs, kind="stable")
+            out = (docs[order], freqs[order], norms[order])
         self.dec[key] = out
         return out
 
@@ -1766,51 +1800,36 @@ class _BucketData:
         within each doc (fully vectorized, no per-doc loop)."""
         if key in self.decp:
             return self.decp[key]
-        g = self.by_key.get(key)
-        if g is None:
+        rows = self.rows.get(key)
+        if rows is None:
             self.decp[key] = None
             return None
-        docs_l, freqs_l, norms_l, pos_l = [], [], [], []
-        for row in g.itertuples(index=False):
-            r = row._asdict()
-            d, f, n = decode_postings_block(r)
-            docs_l.append(d)
-            freqs_l.append(f)
-            norms_l.append(n)
-            pos_l.append(decode_positions_flat(r["pos_blob"], f))
+        docs, freqs, norms = self.blocks(rows)
+        flat = np.concatenate([
+            decode_positions_flat(self.cols["pos_blob"][i], self.block(i)[1])
+            for i in rows])
         # blocks of one (key, bucket) run are doc-ordered already, but
         # generation seams (incremental appends) may interleave: sort.
-        docs = np.concatenate(docs_l)
-        freqs = np.concatenate(freqs_l)
-        norms = np.concatenate(norms_l)
         order = np.argsort(docs, kind="stable")
         if not np.array_equal(order, np.arange(len(docs))):
             # reorder the flat position stream per block-doc
-            lens = freqs
-            starts = np.zeros(len(lens) + 1, dtype=np.int64)
-            np.cumsum(lens, out=starts[1:])
-            flat = np.concatenate(pos_l) if pos_l else np.zeros(0, np.int64)
-            pieces = [flat[starts[i]:starts[i + 1]] for i in order]
-            flat = (np.concatenate(pieces) if pieces
-                    else np.zeros(0, np.int64))
+            starts = np.zeros(len(freqs) + 1, dtype=np.int64)
+            np.cumsum(freqs, out=starts[1:])
+            flat = np.concatenate([flat[starts[i]:starts[i + 1]]
+                                   for i in order])
             docs, freqs, norms = docs[order], freqs[order], norms[order]
-        else:
-            flat = np.concatenate(pos_l) if pos_l else np.zeros(0, np.int64)
         flat_doc = np.repeat(docs - self.off, freqs)
         out = (docs, freqs, norms, flat_doc, flat)
         self.decp[key] = out
         return out
 
 
-def _score_bucket(grp: pd.DataFrame, spec, threshold, heap):
+def _score_bucket(data: _BucketData, spec, threshold, heap):
     if "tree" in spec:
-        return _score_bucket_tree(grp, spec, threshold, heap)
+        return _score_bucket_tree(data, spec, threshold, heap)
     grid = spec["grid"]
-    bucket = int(grp["bucket"].iloc[0])
-    off = bucket * grid
-    mode = spec["mode"]
-    dtype = np.float32 if mode == "f32" else np.float64
-    data = _BucketData(grp, spec, off)
+    off = data.off
+    dtype = np.float32 if spec["mode"] == "f32" else np.float64
 
     clauses = spec["clauses"]
     n_groups = spec["n_groups"]
@@ -1860,18 +1879,8 @@ def _score_bucket(grp: pd.DataFrame, spec, threshold, heap):
                              ub_other=(ub_total - clause_ub.get(ci, 0.0)
                                        if block_skip else 0.0),
                              threshold=threshold)
-        elif c["kind"] == "phrase":
-            res = _eval_phrase(c, data, spec, dtype)
-        elif c["kind"] == "multiphrase":
-            res = _eval_multiphrase(c, data, spec, dtype)
-        elif c["kind"] == "span":
-            res = _eval_span(c, data, spec, dtype)
-        elif c["kind"] == "spantree":
-            res = _eval_spantree(c, data, spec, dtype)
-        elif c["kind"] == "interval":
-            res = _eval_interval(c, data, spec, dtype)
         else:
-            res = _eval_dismax(c, data, spec, dtype, grid)
+            res = _eval_leaf(c, data, spec, dtype, grid)
         if res is None:
             continue
         idxs, s = res
@@ -1886,7 +1895,7 @@ def _score_bucket(grp: pd.DataFrame, spec, threshold, heap):
 
     # must_not exclusion (+ liveDocs tombstones, LeafReader.getLiveDocs)
     excl = None
-    doffs = _bucket_deleted(grp, spec, off, grid)
+    doffs = _bucket_deleted(data, spec, grid)
     if doffs is not None:
         excl = np.zeros(grid, dtype=bool)
         excl[doffs] = True
@@ -1920,27 +1929,25 @@ def _score_bucket(grp: pd.DataFrame, spec, threshold, heap):
     return _emit_hits(hit, score, off, spec, threshold, heap)
 
 
-def _bucket_deleted(grp: pd.DataFrame, spec, off: int, grid: int):
+def _bucket_deleted(data: _BucketData, spec, grid: int):
     """In-bucket offsets of tombstoned docs, from whichever carrier the
     index uses: the in-spec sorted array (small delete sets, sliced by
     searchsorted) or the co-located ``del_offsets`` column (per-cell
     bitmap table joined onto the queried blocks — the liveDocs-file
     analog; the driver never sees doc_ids). → int array or None."""
     deleted = spec.get("deleted")
+    off = data.off
     if deleted is not None and len(deleted):
         lo = int(np.searchsorted(deleted, off))
         hi = int(np.searchsorted(deleted, off + grid))
         if hi > lo:
             return deleted[lo:hi] - off
         return None
-    if "del_offsets" in grp.columns:
-        v = grp["del_offsets"].iloc[0]
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            return None
-        a = np.asarray(v, dtype=np.int64)
-        if len(a):
-            return a
-    return None
+    v = data.del_offsets
+    if v is None or (isinstance(v, float) and np.isnan(v)):
+        return None
+    a = np.asarray(v, dtype=np.int64)
+    return a if len(a) else None
 
 
 def _emit_hits(hit, score, off, spec, threshold, heap):
@@ -1988,17 +1995,14 @@ def _eval_leaf(c, data: "_BucketData", spec, dtype, grid):
     return _eval_dismax(c, data, spec, dtype, grid)
 
 
-def _score_bucket_tree(grp: pd.DataFrame, spec, threshold, heap):
+def _score_bucket_tree(data: _BucketData, spec, threshold, heap):
     """Recursive-plan variant of _score_bucket: evaluate the annotated
     tree to a (mask, score) pair over the bucket grid. Pruning is
     bucket-level only (conservative tree upper bound from the block-max
     skylines); per-block skipping inside nested plans is not attempted —
     correctness-safe, costs only pruning efficiency on deep plans."""
     grid = spec["grid"]
-    bucket = int(grp["bucket"].iloc[0])
-    off = bucket * grid
     dtype = np.float32 if spec["mode"] == "f32" else np.float64
-    data = _BucketData(grp, spec, off)
     root = spec["tree"]
     if not _tree_present(root, data):
         return None, threshold
@@ -2007,14 +2011,14 @@ def _score_bucket_tree(grp: pd.DataFrame, spec, threshold, heap):
         if ub < threshold:
             return None, threshold
     mask, score = _eval_tree(root, data, spec, dtype, grid, scoring=True)
-    doffs = _bucket_deleted(grp, spec, off, grid)
+    doffs = _bucket_deleted(data, spec, grid)
     if doffs is not None:
         mask = mask.copy()
         mask[doffs] = False
     hit = np.flatnonzero(mask)
     if len(hit) == 0:
         return None, threshold
-    return _emit_hits(hit, score, off, spec, threshold, heap)
+    return _emit_hits(hit, score, data.off, spec, threshold, heap)
 
 
 def _tree_present(node, data: "_BucketData") -> bool:
@@ -2065,18 +2069,7 @@ def _eval_tree(node, data: "_BucketData", spec, dtype, grid,
     kind = node["kind"]
     if kind in ("term", "phrase", "multiphrase", "span", "spantree",
                 "interval"):
-        if kind == "term":
-            res = _eval_term(node, data, spec, dtype)
-        elif kind == "phrase":
-            res = _eval_phrase(node, data, spec, dtype)
-        elif kind == "multiphrase":
-            res = _eval_multiphrase(node, data, spec, dtype)
-        elif kind == "span":
-            res = _eval_span(node, data, spec, dtype)
-        elif kind == "interval":
-            res = _eval_interval(node, data, spec, dtype)
-        else:
-            res = _eval_spantree(node, data, spec, dtype)
+        res = _eval_leaf(node, data, spec, dtype, grid)
         mask = np.zeros(grid, dtype=bool)
         score = np.zeros(grid, dtype=dtype)
         if res is not None and len(res[0]):
@@ -2151,18 +2144,18 @@ def _eval_tree(node, data: "_BucketData", spec, dtype, grid,
 
 def _clause_present(c, data: _BucketData) -> bool:
     if c["kind"] == "term":
-        return c["key"] in data.by_key
+        return c["key"] in data.rows
     if c["kind"] in ("phrase", "span"):
-        return all(k in data.by_key for k in c["keys"])
+        return all(k in data.rows for k in c["keys"])
     if c["kind"] == "multiphrase":
-        return all(any(k in data.by_key for k in slot)
+        return all(any(k in data.rows for k in slot)
                    for slot in c["slots"])
     if c["kind"] == "spantree":
         # required-leaf presence (sor alternatives / snot excludes are
         # optional); conservative — never skips a matchable bucket
-        return all(k in data.by_key for k in c["required"])
+        return all(k in data.rows for k in c["required"])
     if c["kind"] == "interval":
-        return all(k in data.by_key
+        return all(k in data.rows
                    for k in _interval_required_keys(c["root"]))
     return any(_clause_present(ch, data) for ch in c["children"])
 
@@ -2245,22 +2238,33 @@ def _score_freqs(freqs, norms, w, field, spec, dtype, cp=None):
     return w * f / (f + k1 * (1.0 - b + b * dl / spec["avgdl64"][field]))
 
 
-def _max_impact(imp_freqs, imp_norms, w, field, spec, dtype, cp=None):
-    if len(imp_freqs) == 0:
-        return 0.0
+def _block_max_impacts(imp, w, field, spec, dtype, cp=None) -> np.ndarray:
+    """float64 max score of each block of a key, from its impact
+    skylines (`_BucketData.impacts`) scored in one vectorized call; 0
+    for a block without impacts."""
+    freqs, norms, starts, lens = imp
+    out = np.zeros(len(lens), dtype=np.float64)
+    if len(freqs) == 0:
+        return out
     if spec.get("sim") == "sweetspot":
         # SweetSpot's lengthNorm is NOT anti-monotone in doc length (it
         # RISES toward the [min,max] plateau), so the pareto skyline's
         # (freq↑, norm↓) guarantee does not bound it — bound with the
         # plateau value ln=1.0 (the global max), monotone in freq only.
         l, h, st_, tb, tm = spec["ss"]
-        f = np.asarray(imp_freqs, dtype=np.float64)
-        tf = np.where(f <= tm, tb, np.sqrt(f + tb * tb - tm))
-        return float(np.max(w * tf))
-    s = _score_freqs(np.asarray(imp_freqs, dtype=np.int64),
-                     np.asarray(imp_norms, dtype=np.int64),
-                     w, field, spec, dtype, cp=cp)
-    return float(np.max(s))
+        f = freqs.astype(np.float64)
+        s = w * np.where(f <= tm, tb, np.sqrt(f + tb * tb - tm))
+    else:
+        s = _score_freqs(freqs, norms, w, field, spec, dtype, cp=cp)
+    nz = lens > 0
+    out[nz] = np.maximum.reduceat(s, starts[nz])
+    return out
+
+
+def _key_ub(data: _BucketData, key, w, field, spec, dtype, cp=None) -> float:
+    """Max over the key's blocks of their block-max score (≥ 0)."""
+    bms = _block_max_impacts(data.impacts(key), w, field, spec, dtype, cp)
+    return max([0.0] + bms.tolist())
 
 
 def _clause_bucket_ub(c, data: _BucketData, spec) -> float:
@@ -2275,27 +2279,17 @@ def _clause_bucket_ub(c, data: _BucketData, spec) -> float:
 def _leaf_ub(c, data: _BucketData, spec, dtype) -> float:
     """Upper bound of a term/phrase/dismax leaf (recursing disjuncts)."""
     if c["kind"] == "term":
-        g = data.by_key.get(c["key"])
-        if g is None:
+        if c["key"] not in data.rows:
             return 0.0
-        w = _term_w(c, spec, dtype)
-        m = 0.0
-        for fr, no in zip(g["imp_freqs"], g["imp_norms"]):
-            m = max(m, _max_impact(fr, no, w, c["key"][0], spec, dtype,
-                                   cp=c.get("cp64")))
-        return m
+        return _key_ub(data, c["key"], _term_w(c, spec, dtype), c["key"][0],
+                       spec, dtype, cp=c.get("cp64"))
     if c["kind"] in ("phrase", "span"):
         if not _clause_present(c, data):
             return 0.0
         # phrase/span freq <= min term freq in doc; bound by the weight
         # applied at the max min-term impact (cheap, safe bound)
         w = np.float32(c["w32"]) if dtype is np.float32 else c["w64"]
-        field = c["keys"][0][0]
-        m = 0.0
-        g = data.by_key.get(c["keys"][0])
-        for fr, no in zip(g["imp_freqs"], g["imp_norms"]):
-            m = max(m, _max_impact(fr, no, w, field, spec, dtype))
-        return m
+        return _key_ub(data, c["keys"][0], w, c["keys"][0][0], spec, dtype)
     if c["kind"] in ("multiphrase", "spantree", "interval"):
         if not _clause_present(c, data):
             return 0.0
@@ -2319,29 +2313,26 @@ def _eval_term(c, data: _BucketData, spec, dtype, skip=False,
     field = key[0]
     w = _term_w(c, spec, dtype)
     if skip and key not in data.dec:
-        g = data.by_key.get(key)
-        if g is None:
+        rows = data.rows.get(key)
+        if rows is None:
             return None
         # per-block skip: a block whose max possible TOTAL score is below
-        # the current threshold cannot contribute a top-k doc
-        idx_l, s_l = [], []
-        for row in g.itertuples(index=False):
-            r = row._asdict()
-            bm = _max_impact(r["imp_freqs"], r["imp_norms"], w, field,
-                             spec, dtype, cp=c.get("cp64"))
-            if (bm + ub_other) * (1.0 + _UB_EPS) + _UB_EPS < threshold:
-                continue
-            d, f, n = decode_postings_block(r)
-            idx_l.append(d - data.off)
-            s_l.append(_score_freqs(f, n, w, field, spec, dtype,
-                                    cp=c.get("cp64")))
-        if not idx_l:
+        # the current threshold cannot contribute a top-k doc. A key that
+        # an earlier clause or query already decoded is scored whole (the
+        # else branch): skipping only drops docs that cannot reach the
+        # top k, so both branches give the same top k.
+        bms = _block_max_impacts(data.impacts(key), w, field, spec, dtype,
+                                 cp=c.get("cp64"))
+        keep = ~((bms + ub_other) * (1.0 + _UB_EPS) + _UB_EPS < threshold)
+        if not keep.any():
             return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dtype)
-        return np.concatenate(idx_l), np.concatenate(s_l)
-    d = data.decode(key)
-    if d is None:
-        return None
-    docs, freqs, norms = d
+        docs, freqs, norms = data.blocks(
+            [i for i, kp in zip(rows, keep) if kp])
+    else:
+        d = data.decode(key)
+        if d is None:
+            return None
+        docs, freqs, norms = d
     return docs - data.off, _score_freqs(freqs, norms, w, field, spec, dtype,
                                          cp=c.get("cp64"))
 

@@ -36,7 +36,7 @@ def get_spark(app="lucene_solr_spark", cores: int | None = None,
         local_dir = "/dev/shm/spark-local"
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem())
     if "SPARK_GRAFT_MASTER" in os.environ:
         builder = (builder.master(os.environ["SPARK_GRAFT_MASTER"])
                    .config("spark.driver.memory", mem))
@@ -46,3 +46,14 @@ def get_spark(app="lucene_solr_spark", cores: int | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _default_driver_mem() -> str:
+    """16g, capped at half the host's physical memory: a local-mode JVM
+    grows its heap toward the maximum before collecting hard, and a 16g
+    heap on a 16 GB host gets the driver killed for lack of memory."""
+    try:
+        host_b = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{max(1, min(16, host_b // 2**31))}g"

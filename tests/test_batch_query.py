@@ -41,3 +41,42 @@ def test_batch_f64_mode(searcher):
     for s, q, got in zip(QUERIES, qs, batch):
         want = searcher.top_k(q, k=5, mode="f64")
         assert got["doc_id"].tolist() == want["doc_id"].tolist(), s
+
+
+# one head term ("merge") in OR, AND, phrase, NOT and nested shapes: the
+# batch kernel decodes it once per bucket and shares it across all of them
+SHARED_HEAD = ["merge spark", "merge spark table", "merge AND spark",
+               "merge AND table AND join", '"merge spark"', '"fast merge"',
+               "merge", "merge NOT dup", "(merge OR fast) AND table"]
+
+
+@pytest.fixture(scope="module")
+def shared_head_reference(searcher):
+    qs = [parse_query(s, ENGLISH_ANALYZER) for s in SHARED_HEAD]
+    return qs, [searcher.top_k(q, k=10, mode="f32", prune=False) for q in qs]
+
+
+@pytest.mark.parametrize("prune", [True, False])
+@pytest.mark.parametrize("rows_per_batch", [1, 10000])
+def test_batch_shared_head_term(searcher, shared_head_reference, prune,
+                                rows_per_batch):
+    """top_k_many == per-query top_k == exhaustive reference, whatever
+    the pruning and the Arrow batch size (1 row per batch carries every
+    bucket's tail across batches)."""
+    qs, ref = shared_head_reference
+    conf = searcher.spark.conf
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = conf.get(key)
+    conf.set(key, str(rows_per_batch))
+    try:
+        batch = searcher.top_k_many(qs, k=10, mode="f32", prune=prune)
+        single = [searcher.top_k(q, k=10, mode="f32", prune=prune)
+                  for q in qs]
+    finally:
+        conf.set(key, old)
+    assert sum(len(r) for r in ref) > 0
+    for s, got, one, want in zip(SHARED_HEAD, batch, single, ref):
+        for res in (got, one):
+            assert res["doc_id"].tolist() == want["doc_id"].tolist(), s
+            assert res["score"].tolist() == want["score"].tolist(), s
+            assert res["score"].dtype == want["score"].dtype, s

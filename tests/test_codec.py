@@ -24,6 +24,16 @@ def test_vbyte_roundtrip():
     assert np.array_equal(vbyte_decode(vbyte_encode(vals), len(vals)), vals)
 
 
+def test_vbyte_decode_one_byte_values_and_prefixes():
+    small = np.array([0, 1, 5, 127, 3], dtype=np.int64)
+    assert np.array_equal(vbyte_decode(vbyte_encode(small), 5), small)
+    # decode only the first `count` values of a longer stream
+    mixed = np.array([1, 2, 300, 4, 70000, 6], dtype=np.int64)
+    buf = vbyte_encode(mixed)
+    for count in range(1, len(mixed) + 1):
+        assert np.array_equal(vbyte_decode(buf, count), mixed[:count])
+
+
 @pytest.mark.parametrize("dist", ["all1", "zipf", "maxint", "mixed"])
 def test_for_pfor_roundtrip_full_block(dist):
     for _ in range(20):

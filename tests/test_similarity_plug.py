@@ -345,8 +345,8 @@ def test_sweetspot_or_composition(spark, corpus):
 
 def test_sweetspot_pruned_equals_exhaustive(spark, corpus):
     # lengthNorm is NOT anti-monotone in dl — the skyline bound uses the
-    # plateau max (executor._max_impact special case); this differential
-    # is the guard that the bound never over-prunes
+    # plateau max (executor._block_max_impacts special case); this
+    # differential is the guard that the bound never over-prunes
     _, oracle, idx = corpus
     t1, t2, t3 = _top_terms(oracle)[:3]
     s = Searcher(spark, idx, similarity="sweetspot",
